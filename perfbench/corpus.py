@@ -17,6 +17,7 @@ from harness import Ctx, force, setup
 from tracing import median, tail
 
 SF = 0.005  # lineitem ~30k rows, documents 250, embeddings 100
+SETUP_REPS = 5
 
 # One or two queries per operator module. Left out: ann_index, pq,
 # classify, dsir, mmr, multimodal and sketches, whose query tried took
@@ -62,37 +63,45 @@ def layer_of(name: str) -> str:
     return "functions" if name in SHOWCASES else "operators"
 
 
-def _sort_key(v):
-    if isinstance(v, float):
-        return (1, float(f"{v:.9g}")) if v == v else (0, 0.0)
-    return (2, str(v)) if v is not None else (0, 0.0)
+# The one column whose value the oracle may round differently: DuckDB's
+# DECIMAL -> DOUBLE cast is not correctly rounded, so this exact-decimal
+# sum can land one ulp away from Spark's correctly rounded value on
+# some seeds. Every other cell must match the canonical hash exactly.
+ONE_ULP_COLUMNS = {"q1_pricing_summary": {"sum_charge"}}
 
 
-def same_result(spark_pdf, oracle_pdf) -> tuple[bool, bool]:
-    """(equal, equal_only_within_float_tolerance). First the repo's own
+def _one_ulp_apart(a: float, b: float) -> bool:
+    return isinstance(a, float) and isinstance(b, float) and (a == b or math.nextafter(a, b) == b)
+
+
+def same_result(name: str, spark_pdf, oracle_pdf) -> tuple[bool, bool]:
+    """(equal, equal_only_within_one_ulp). First the repo's own
     canonical hash (scripts/check_correctness.py). Where only the hash
-    differs, the rows are compared again with floats equal to within
-    1e-12 relative: DuckDB's DECIMAL -> DOUBLE cast is not correctly
-    rounded, so an exact-decimal aggregate can land one ulp away from
-    Spark's (correctly rounded) value. Row count, column names and
-    dtypes must still match exactly."""
+    differs and the query has a column in ONE_ULP_COLUMNS, the rows are
+    compared again, sorted on the other columns: those columns' floats
+    may be one ulp apart, every other cell must be equal as the hash
+    sees it. Row count, column names and dtypes must match exactly."""
     from scripts.check_correctness import _cell, canon
 
     ha, na, ca, da = canon(spark_pdf)
     hb, nb, cb, db = canon(oracle_pdf)
     if (ha, na, ca) == (hb, nb, cb):
         return True, False
-    if (na, ca, da) != (nb, cb, db):
+    loose = sorted(ONE_ULP_COLUMNS.get(name, set()) & set(ca))
+    if not loose or (na, ca, da) != (nb, cb, db):
         return False, False
-    rows_a = sorted(spark_pdf[ca].itertuples(index=False), key=lambda r: [_sort_key(v) for v in r])
-    rows_b = sorted(oracle_pdf[cb].itertuples(index=False), key=lambda r: [_sort_key(v) for v in r])
-    for ra, rb in zip(rows_a, rows_b):
-        for va, vb in zip(ra, rb):
-            if isinstance(va, float) and isinstance(vb, float):
-                if not (va == vb or (va != va and vb != vb) or math.isclose(va, vb, rel_tol=1e-12)):
-                    return False, False
-            elif _cell(va) != _cell(vb):
-                return False, False
+    exact = [c for c in ca if c not in loose]
+
+    def rows(pdf) -> list[tuple[list[str], list[float]]]:
+        k = len(exact)
+        return sorted(
+            ([_cell(v) for v in r[:k]], list(r[k:]))
+            for r in pdf[exact + loose].itertuples(index=False)
+        )
+
+    for (keys_a, floats_a), (keys_b, floats_b) in zip(rows(spark_pdf), rows(oracle_pdf)):
+        if keys_a != keys_b or not all(map(_one_ulp_apart, floats_a, floats_b)):
+            return False, False
     return True, True
 
 
@@ -100,7 +109,7 @@ def prepare(ctx: Ctx) -> dict:
     import duckdb
 
     data = gen.write_corpus(ctx.seed, SF, os.path.join(ctx.work, "corpus"))
-    ctx.e2e["setup_s"] = setup(ctx, [(data, t) for t in TABLES])
+    ctx.e2e["setup_s"], _ = setup(ctx, SETUP_REPS, [(data, t) for t in TABLES])
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{data}/{t}.parquet'")
@@ -108,58 +117,56 @@ def prepare(ctx: Ctx) -> dict:
 
 
 def measure(ctx: Ctx, state: dict) -> float:
-    """Passes over QUERIES until ``ctx.seconds`` have gone (at least
-    one); checks the first pass. Returns the median pass time."""
+    """One pass over QUERIES, in a JVM that ran only the set-ups, then
+    the untimed check of each result. ``ctx.seconds`` does not apply:
+    a second pass would run warm and mix its times with the cold ones.
+    The pass is the batch job a user waits for, so it is the one sample
+    of the end-to-end latency; the queries' own times are per-layer
+    figures. Returns the pass time (the queries' summed times)."""
     import __spark_entry__ as entry
 
     tr, spark, data, con = ctx.tracer, ctx.spark, state["data"], state["duckdb"]
     queries, oracles = entry.queries(), entry.oracle_sql()
-    q_times: dict[str, list[float]] = {q: [] for q in QUERIES}
-    passes: list[float] = []
+    q_times: dict[str, float] = {}
     rows: dict[str, int] = {}
     ulp_only = 0
-    t_start = time.perf_counter()
-    while not passes or time.perf_counter() - t_start < ctx.seconds:
-        first = not passes
-        busy = 0.0
-        for name in QUERIES:
-            ctx.attempted += 1
-            t0 = time.perf_counter()
-            try:
-                with tr.span(f"{layer_of(name)}.{name}"):
-                    df = force(ctx, queries[name](spark, data))
-            except Exception as e:  # noqa: BLE001 — one query's failure is counted, not fatal
-                ctx.failed += 1
-                ctx.report.append(f"FAILED {name}: {type(e).__name__}: {str(e)[:200]}")
-                continue
-            took = time.perf_counter() - t0
-            busy += took
-            q_times[name].append(took)
-            if first:  # check once per measurement, outside the timed section
-                with tr.suspended():
-                    got = df.toPandas()
-                    ok, ulp = same_result(got, con.sql(oracles[name]).df())
-                rows[name] = len(got)
-                ulp_only += ulp
-                if not ok:
-                    ctx.failed += 1
-                    ctx.report.append(f"WRONG {name}: differs from its DuckDB twin")
-            df.unpersist()
-        passes.append(busy)
+    for name in QUERIES:
+        ctx.attempted += 1
+        t0 = time.perf_counter()
+        try:
+            with tr.span(f"{layer_of(name)}.{name}"):
+                df = force(ctx, queries[name](spark, data))
+        except Exception as e:  # noqa: BLE001 — one query's failure is counted, not fatal
+            ctx.failed += 1
+            ctx.report.append(f"FAILED {name}: {type(e).__name__}: {str(e)[:200]}")
+            continue
+        q_times[name] = time.perf_counter() - t0
+        with tr.suspended():  # the check, outside the timed section
+            got = df.toPandas()
+            ok, ulp = same_result(name, got, con.sql(oracles[name]).df())
+        rows[name] = len(got)
+        ulp_only += ulp
+        if not ok:
+            ctx.failed += 1
+            ctx.report.append(f"WRONG {name}: differs from its DuckDB twin")
+        df.unpersist()
 
-    per_query = [t for ts in q_times.values() for t in ts]
-    p50, (tl, label) = median(per_query), tail(per_query)
-    ctx.e2e["pass_wall_s"] = median(passes)
-    ctx.e2e["latency_p50_s"] = p50
-    ctx.e2e["latency_tail_s"] = tl
-    ctx.note("batch_wall_s", median(passes), "s", f"median of {len(passes)} pass(es)")
-    ctx.note("query_latency_p50_s", p50, "s", f"n={len(per_query)}")
-    ctx.note(f"query_latency_{label}_s", tl, "s", f"n={len(per_query)}")
-    ctx.note("ulp_only_matches", ulp_only, "count")
-    ctx.layers["batch_wall_s"] = median(passes)
+    per_query = list(q_times.values())
+    wall = sum(per_query)
+    ctx.e2e["pass_wall_s"] = wall
+    # one sample: its median and its tail (the maximum) are the pass
+    ctx.e2e["latency_p50_s"] = ctx.e2e["latency_tail_s"] = wall
+    q50, (qt, label) = median(per_query), tail(per_query)
+    ctx.note("batch_wall_s", wall, "s", f"{len(per_query)} queries, one pass")
+    ctx.note("query_latency_p50_s", q50, "s", f"n={len(per_query)}")
+    ctx.note(f"query_latency_{label}_s", qt, "s", f"n={len(per_query)}")
+    ctx.note("one_ulp_matches", ulp_only, "count")
+    ctx.layers["batch_wall_s"] = wall
+    ctx.layers["query_latency_p50_s"] = q50
+    ctx.layers["query_latency_tail_s"] = qt
     for name in QUERIES:
         layer = layer_of(name)
-        ctx.layers[f"{layer}.{name}_s"] = median(q_times[name])
+        ctx.layers[f"{layer}.{name}_s"] = q_times.get(name, 0.0)
         ctx.layers[f"{layer}.{name}_rows"] = rows.get(name, 0)
-    ctx.layers["checks.ulp_only_matches"] = ulp_only
-    return median(passes)
+    ctx.layers["checks.one_ulp_matches"] = ulp_only
+    return wall

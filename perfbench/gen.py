@@ -1,4 +1,4 @@
-"""Seeded input generators for the three benchmark workloads.
+"""Seeded input generators for the benchmark workloads.
 
 Everything here is a pure function of (seed, size): the same seed
 writes byte-identical inputs. Nothing is read from outside the
@@ -6,9 +6,9 @@ benchmark's work directory, and nothing is written outside it.
 
 - ``write_corpus``: the ten TPC-H-ish + LLM-corpus tables the batch
   queries read (the schema and value distributions of the repo's
-  synthetic test tables), as one parquet file per table.
-- ``ingest_plan``: the seed canon and the pages the HTTP stub serves,
-  with a manifest of the exact duplicates planted in the pages.
+  synthetic test tables), as one parquet file per table. ``events.ts``
+  is written as TIMESTAMP(NANOS), as the repo's event tables are, so
+  ``mito_spark.engine.load_table``'s nanosecond path is measured.
 - ``event_file_rows``: the rows of one file of the event stream.
 """
 
@@ -16,8 +16,6 @@ from __future__ import annotations
 
 import json
 import os
-from dataclasses import dataclass
-
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -158,7 +156,7 @@ def corpus_tables(seed: int, sf: float) -> dict[str, pa.Table]:
     t["events"] = pa.table(
         {
             "event_id": pa.array(np.arange(n_ev), pa.int64()),
-            "ts": pa.array(_EPOCH_2024 + ts.astype("timedelta64[us]"), pa.timestamp("us")),
+            "ts": pa.array(_EPOCH_2024 + ts.astype("timedelta64[us]"), pa.timestamp("ns")),
             "user_id": pa.array(r.integers(0, n_users, n_ev), pa.int64()),
             "event_type": [EVENT_TYPES[i] for i in r.integers(0, 5, n_ev)],
             "value": np.round(r.exponential(50.0, n_ev), 2),
@@ -208,55 +206,6 @@ def write_corpus(seed: int, sf: float, out_dir: str) -> str:
     for name, table in corpus_tables(seed, sf).items():
         pq.write_table(table, os.path.join(out_dir, f"{name}.parquet"))
     return out_dir
-
-
-@dataclass
-class IngestPlan:
-    """What the HTTP stub serves, and what the flags must show."""
-
-    canon: list[tuple[int, str]]
-    pages: list[list[dict]]
-    planted: dict[int, int]  # doc_id -> source doc_id
-
-    @property
-    def served_ids(self) -> list[int]:
-        return [d["doc_id"] for page in self.pages for d in page]
-
-
-def ingest_plan(
-    seed: int, n_canon: int, n_pages: int, page_docs: int, dup_share: float
-) -> IngestPlan:
-    """A canon of distinct docs and ``n_pages`` pages of new docs.
-    ``dup_share`` of each page are exact copies of a canon doc or of
-    an accepted doc of an EARLIER page (docs inside one page are never
-    compared with each other); the rest are fresh random texts, which
-    at 20-60 words over a 400-word vocabulary share no 3-shingle run
-    long enough to reach the 0.5 Jaccard threshold."""
-    r = _rng(seed, "ingest")
-    vocab = [f"{w}{i}" for i in range(14) for w in WORDS[:29]][:400]
-
-    def fresh() -> str:
-        return " ".join(vocab[i] for i in r.integers(0, len(vocab), int(r.integers(20, 61))))
-
-    canon = [(i, fresh()) for i in range(n_canon)]
-    pool = list(canon)  # docs a later page may duplicate
-    pages: list[list[dict]] = []
-    planted: dict[int, int] = {}
-    next_id = 1_000_000
-    for _ in range(n_pages):
-        page, accepted = [], []
-        for _ in range(page_docs):
-            if r.random() < dup_share:
-                src_id, text = pool[int(r.integers(0, len(pool)))]
-                planted[next_id] = src_id
-            else:
-                text = fresh()
-                accepted.append((next_id, text))
-            page.append({"doc_id": next_id, "text": text})
-            next_id += 1
-        pages.append(page)
-        pool.extend(accepted)
-    return IngestPlan(canon=canon, pages=pages, planted=planted)
 
 
 EVENT_SCHEMA = pa.schema(

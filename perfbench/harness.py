@@ -11,9 +11,8 @@ from dataclasses import dataclass, field
 from tracing import Tracer, median
 
 # The benchmark's host has 4 cores: one Spark process on at most 4
-# local cores; the HTTP stub and the file generator get one thread each.
+# local cores; the stream's file generator gets one thread.
 CORES = min(4, os.cpu_count() or 1)
-SETUP_REPS = 5
 
 
 @dataclass
@@ -26,7 +25,6 @@ class Ctx:
     e2e: dict[str, float] = field(default_factory=dict)
     layers: dict[str, float] = field(default_factory=dict)
     report: list[str] = field(default_factory=list)
-    cleanup: list = field(default_factory=list)  # callables run when the run ends
     attempted: int = 0
     failed: int = 0
 
@@ -35,17 +33,23 @@ class Ctx:
         self.report.append(f"{name:34s} {value:14.6f} {unit:7s} {extra}".rstrip())
 
 
-def setup(ctx: Ctx, tables: list[tuple[str, str]], extra=None) -> float:
-    """Start Spark and resolve the workload's tables, ``SETUP_REPS``
-    times (stopping the session in between); return the median
-    seconds. ``extra(spark)`` is set-up work the workload adds (a
-    data-source registration, a spec compile), timed with the rest."""
+def setup(ctx: Ctx, reps: int, tables: list[tuple[str, str]], start=None, stop=None):
+    """Start Spark and resolve the workload's tables ``reps`` times
+    (stopping the session in between); only the first launches the
+    JVM, so the median is a warm set-up. ``start(spark)`` is
+    set-up work the workload adds (starting its streaming queries),
+    timed with the rest; ``stop(started)`` undoes it before the next
+    set-up stops the session. Returns the median seconds and what the
+    last ``start`` returned, which the measurement goes on to use."""
     from mito_spark.engine import get_spark, load_table
 
     tr = ctx.tracer
     times = []
-    for _ in range(SETUP_REPS):
+    started = None
+    for _ in range(reps):
         if ctx.spark is not None:
+            if stop is not None:
+                stop(started)
             ctx.spark.stop()
         t0 = time.perf_counter()
         with tr.span("engine.get_spark"):
@@ -53,14 +57,18 @@ def setup(ctx: Ctx, tables: list[tuple[str, str]], extra=None) -> float:
         with tr.span("engine.load_table"):
             for sf_dir, name in tables:
                 load_table(spark, sf_dir, name)
-        if extra is not None:
-            extra(spark)
-        times.append(time.perf_counter() - t0)
+        took = time.perf_counter() - t0
         spark.sparkContext.setLogLevel("ERROR")
         ctx.spark = spark
+        if start is not None:
+            t0 = time.perf_counter()
+            started = start(spark)
+            took += time.perf_counter() - t0
+        times.append(took)
     for name in ("engine.get_spark", "engine.load_table"):
         ctx.layers[f"{name}_s"] = median(tr.durations(name))
-    return median(times)
+    ctx.note("setup_s", median(times), "s", "median of: " + " ".join(f"{t:.3f}" for t in times))
+    return median(times), started
 
 
 def stop_spark(spark) -> None:

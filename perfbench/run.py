@@ -1,6 +1,6 @@
 """Benchmark entry point.
 
-    python3 perfbench/run.py --workload corpus_batch --seed 1 --seconds 20 --trace 0
+    python3 perfbench/run.py --workload corpus_batch --seed 1 --seconds 15 --trace 0
 
 Run from the root of a checkout of the repository. Generates the
 workload's inputs from ``--seed`` under ``.bench_work/`` in the
@@ -30,12 +30,11 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, HERE)
 
 import corpus  # noqa: E402
-import ingest  # noqa: E402
 import stream  # noqa: E402
-from harness import CORES, SETUP_REPS, Ctx, stop_spark  # noqa: E402
+from harness import CORES, Ctx, stop_spark  # noqa: E402
 from tracing import Tracer, install_action_hooks  # noqa: E402
 
-WORKLOADS = {"corpus_batch": corpus, "http_ingest": ingest, "event_stream": stream}
+WORKLOADS = {"corpus_batch": corpus, "event_stream": stream}
 END_TO_END = {
     "setup_s": "s",
     "pass_wall_s": "s",
@@ -50,11 +49,11 @@ def _unit(name: str) -> str:
         return "ms"
     if name.endswith("_per_s"):
         return "1/s"
-    if name.endswith("_s") or ".step_s." in name:
+    if name.endswith("_s"):
         return "s"
     if name.endswith("bytes"):
         return "bytes"
-    if name.endswith(("growth", "error_rate", "per_page")):
+    if name.endswith("error_rate"):
         return "ratio"
     return "count"
 
@@ -63,11 +62,8 @@ def per_layer_names() -> list[str]:
     names = ["engine.get_spark_s", "engine.load_table_s"]
     for q in corpus.QUERIES:
         names += [f"{corpus.layer_of(q)}.{q}_s", f"{corpus.layer_of(q)}.{q}_rows"]
-    names += ["batch_wall_s", "checks.ulp_only_matches", "checks.error_rate"]
-    names += ["ingest_docs_per_s", "ingest_step_p50_s", "ingest_step_tail_s"]
-    names += [f"streaming.step_s.{i}" for i in range(1, ingest.N_PAGES + 1)]
-    names += ["streaming.step_growth", "streaming.tail_s", "spark.plan_growth"]
-    names += ["sources.http_requests_per_page", "sources.http_bytes", "sources.http_errors"]
+    names += ["batch_wall_s", "query_latency_p50_s", "query_latency_tail_s"]
+    names += ["checks.one_ulp_matches", "checks.error_rate"]
     names += ["spark.plan_s", "spark.exec_s"]
     for q in stream.QUERY_NAMES:
         names += [f"{q}_latency_p50_s", f"{q}_latency_tail_s"]
@@ -114,7 +110,7 @@ def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--workload", required=True, choices=sorted(WORKLOADS))
     ap.add_argument("--seed", type=int, default=0)
-    ap.add_argument("--seconds", type=float, default=20.0)
+    ap.add_argument("--seconds", type=float, default=15.0)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     args = ap.parse_args(argv)
 
@@ -151,8 +147,6 @@ def main(argv: list[str] | None = None) -> int:
         else:
             mod.measure(ctx, state)
     finally:
-        for fn in reversed(ctx.cleanup):
-            fn()
         if ctx.spark is not None:
             stop_spark(ctx.spark)
         os.chdir(root)
@@ -165,7 +159,6 @@ def main(argv: list[str] | None = None) -> int:
         return 1
     error_rate = ctx.failed / ctx.attempted if ctx.attempted else 1.0
     ctx.layers["checks.error_rate"] = error_rate
-    ctx.note("setup_s", ctx.e2e["setup_s"], "s", f"median of {SETUP_REPS} set-ups")
     ctx.note("error_rate", error_rate, "ratio", f"{ctx.failed} of {ctx.attempted} ops")
     print(f"== {args.workload} seed={args.seed} seconds={args.seconds:g} trace={args.trace} cores={CORES}")
     for line in ctx.report:

@@ -18,6 +18,7 @@ sink writes dominate; operator kernels do little.
 from __future__ import annotations
 
 import glob
+import itertools
 import json
 import math
 import os
@@ -36,10 +37,21 @@ FILES_PER_S = 4.0  # offered rate: 4 files/s x 500 events = 2000 events/s
 EVENTS_PER_FILE = 500
 N_USERS = 100
 DRAIN_TIMEOUT_S = 60.0
-# A fixed micro-batch interval. Run back to back, the two queries'
-# batches contend for the cores (about 1.5 s each, against 0.6-0.9 s on
-# a 2-second clock), and latency follows every change in host load.
-TRIGGER = "2 seconds"
+# A set-up here takes about 3 s warm (against 1 s for corpus_batch's),
+# so fewer of them fit the time a run may take.
+SETUP_REPS = 3
+# A fixed micro-batch interval, longer than a batch takes. Run back to
+# back, the two queries' batches contend for the cores and latency
+# follows every change in host load; on a 2-second clock a batch took
+# 0.7-2.3 s on a busy host, so batches overran the clock and queued.
+TRIGGER_S = 3.0
+TRIGGER = f"{TRIGGER_S:g} seconds"
+# Spark fires a processing-time trigger at whole multiples of its
+# interval since the epoch. The generator starts this far past such an
+# instant, so every run offers its files at the same phase of the
+# trigger clock (mid-way between two files' due times, never at a
+# trigger), and the wait for the next trigger does not vary by run.
+PHASE_S = 0.5 / FILES_PER_S
 QUERY_NAMES = ("transform", "cursor")
 SPEC = {
     "ops": [
@@ -67,23 +79,24 @@ SPARK_SCHEMA = (
 )
 
 
-def prepare(ctx: Ctx) -> dict:
-    from mito_spark.plans.pipeline_spec import compile_pipeline
+def write_file(seed: int, k: int, due: float, staging: str, incoming: str) -> None:
+    """Write stream file k, each event stamped with ``due`` (epoch s)."""
+    cols = gen.event_file_rows(seed, k, EVENTS_PER_FILE, N_USERS)
+    cols["created_us"] = np.full(EVENTS_PER_FILE, int(due * 1e6), dtype=np.int64)
+    name = file_name(k)
+    tmp = os.path.join(staging, name)
+    pq.write_table(pa.table(cols, schema=gen.EVENT_SCHEMA), tmp)
+    os.rename(tmp, os.path.join(incoming, name))  # atomic: never half-read
 
-    compiled = {}
 
-    def compile_spec(_spark) -> None:
-        with ctx.tracer.span("plans.compile_pipeline"):
-            compiled["spec"] = compile_pipeline(SPEC)
-
-    ctx.e2e["setup_s"] = setup(ctx, [], compile_spec)
-    ctx.spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "10000")
-    return {"spec": compiled["spec"]}
+def file_name(k: int) -> str:
+    return f"ev-{k:05d}.parquet"
 
 
 class Generator(threading.Thread):
     """Writes file k at ``t0 + (k - 1) / FILES_PER_S`` (k = 1..n), stamped
-    with that due time, whether or not the queries keep up."""
+    with that due time, whether or not the queries keep up. ``t0`` is
+    ``PHASE_S`` after the next trigger instant."""
 
     def __init__(self, seed: int, staging: str, incoming: str, n_files: int):
         super().__init__(name="event-generator", daemon=True)
@@ -92,23 +105,15 @@ class Generator(threading.Thread):
         self.late: list[float] = []  # seconds each file landed after its due time
         self.t0 = 0.0
 
-    def write(self, k: int, due: float) -> None:
-        cols = gen.event_file_rows(self.seed, k, EVENTS_PER_FILE, N_USERS)
-        cols["created_us"] = np.full(EVENTS_PER_FILE, int(due * 1e6), dtype=np.int64)
-        name = f"ev-{k:05d}.parquet"
-        tmp = os.path.join(self.staging, name)
-        pq.write_table(pa.table(cols, schema=gen.EVENT_SCHEMA), tmp)
-        os.rename(tmp, os.path.join(self.incoming, name))  # atomic: never half-read
-        self.due[k] = due
-
     def run(self) -> None:
-        self.t0 = time.time()
+        self.t0 = (math.floor(time.time() / TRIGGER_S) + 1) * TRIGGER_S + PHASE_S
         for k in range(1, self.n_files + 1):
             due = self.t0 + (k - 1) / FILES_PER_S
             wait = due - time.time()
             if wait > 0:
                 time.sleep(wait)
-            self.write(k, due)
+            write_file(self.seed, k, due, self.staging, self.incoming)
+            self.due[k] = due
             self.late.append(time.time() - due)
 
 
@@ -158,101 +163,141 @@ def expected_transform(seed: int, files: list[int]) -> set[tuple]:
     return keep
 
 
-def measure(ctx: Ctx, state: dict) -> float:
-    """One open-loop run: warm-up file, ``ctx.seconds`` of offered load,
-    drain, then the untimed checks. Returns the wall time from the
-    generator's start until every offered event was emitted by both
-    queries."""
-    from pyspark.sql import functions as F
+class Streams:
+    """Both queries over one watched directory, and what their sink
+    callbacks saw: the time each batch was emitted, and the cursors."""
 
-    from mito_spark.sources.sinks import write_partitioned
-    from mito_spark.streaming.stateful import per_key_cursor
+    def __init__(self, ctx: Ctx, spark, spec, base: str):
+        self.ctx, self.spark, self.spec, self.base = ctx, spark, spec, base
+        self.incoming, self.staging, self.sink = (
+            os.path.join(base, d) for d in ("incoming", "staging", "sink")
+        )
+        for d in (self.incoming, self.staging):
+            os.makedirs(d)
+        self.emitted: dict[str, dict[int, float]] = {q: {} for q in QUERY_NAMES}
+        self.cursors: dict[int, tuple] = {}
+        self.queries: dict = {}
 
-    tr, spark, spec = ctx.tracer, ctx.spark, state["spec"]
-    base = os.path.join(ctx.work, "stream")
-    incoming, staging, sink = (os.path.join(base, d) for d in ("incoming", "staging", "sink"))
-    for d in (incoming, staging):
-        os.makedirs(d)
-    n_files = max(int(ctx.seconds * FILES_PER_S), 1)
-    generator = Generator(ctx.seed, staging, incoming, n_files)
-    emitted: dict[str, dict[int, float]] = {q: {} for q in QUERY_NAMES}
-    cursors: dict[int, tuple] = {}
+    def transform_batch(self, df, batch_id: int) -> None:
+        from pyspark.sql import functions as F
 
-    def transform_batch(df, batch_id: int) -> None:
+        from mito_spark.sources.sinks import write_partitioned
+
+        tr = self.ctx.tracer
         with tr.span("plans.apply"):
-            out = spec(df).withColumn("batch_id", F.lit(batch_id))
+            out = self.spec(df).withColumn("batch_id", F.lit(batch_id))
         with tr.span("sources.write_partitioned"):
-            write_partitioned(out, sink, "event_type", mode="append")
-        emitted["transform"][batch_id] = time.time()
+            write_partitioned(out, self.sink, "event_type", mode="append")
+        self.emitted["transform"][batch_id] = time.time()
 
-    def cursor_batch(df, batch_id: int) -> None:
+    def cursor_batch(self, df, batch_id: int) -> None:
         for r in df.collect():
-            cursors[r["user_id"]] = (r["n_events"], r["first_ts"], r["last_ts"], r["total_value"])
-        emitted["cursor"][batch_id] = time.time()
+            self.cursors[r["user_id"]] = (r["n_events"], r["first_ts"], r["last_ts"], r["total_value"])
+        self.emitted["cursor"][batch_id] = time.time()
 
-    def source():
-        return spark.readStream.schema(SPARK_SCHEMA).parquet(incoming)
+    def start(self) -> "Streams":
+        """Write the warm-up file, start both queries, and wait until
+        both have emitted it: the stream's set-up, which starts the
+        queries' Python workers and state store."""
+        from mito_spark.streaming.stateful import per_key_cursor
 
-    generator.write(0, time.time())  # warm-up file: starts the Python workers
-    queries = {}
-    with tr.span("streaming.per_key_cursor"):
-        cursor_df = per_key_cursor(source())
-    queries["transform"] = (
-        source().writeStream.foreachBatch(transform_batch)
-        .trigger(processingTime=TRIGGER)
-        .option("checkpointLocation", os.path.join(base, "ckpt-transform")).start()
-    )
-    queries["cursor"] = (
-        cursor_df.writeStream.outputMode("update").foreachBatch(cursor_batch)
-        .trigger(processingTime=TRIGGER)
-        .option("checkpointLocation", os.path.join(base, "ckpt-cursor")).start()
-    )
-    total = (n_files + 1) * EVENTS_PER_FILE
-    names = [f"ev-{k:05d}.parquet" for k in range(n_files + 1)]
+        self.spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "10000")
+        write_file(self.ctx.seed, 0, time.time(), self.staging, self.incoming)
 
-    def emit_times(name: str) -> dict[str, float]:
+        def source():
+            return self.spark.readStream.schema(SPARK_SCHEMA).parquet(self.incoming)
+
+        with self.ctx.tracer.span("streaming.per_key_cursor"):
+            cursor_df = per_key_cursor(source())
+        self.queries["transform"] = (
+            source().writeStream.foreachBatch(self.transform_batch)
+            .trigger(processingTime=TRIGGER)
+            .option("checkpointLocation", os.path.join(self.base, "ckpt-transform")).start()
+        )
+        self.queries["cursor"] = (
+            cursor_df.writeStream.outputMode("update").foreachBatch(self.cursor_batch)
+            .trigger(processingTime=TRIGGER)
+            .option("checkpointLocation", os.path.join(self.base, "ckpt-cursor")).start()
+        )
+        if not self.wait_for([file_name(0)], DRAIN_TIMEOUT_S, poll=0.01):
+            raise RuntimeError(f"the warm-up file was not emitted within {DRAIN_TIMEOUT_S:.0f} s")
+        return self
+
+    def emit_times(self, name: str) -> dict[str, float]:
         """File -> time the query's sink callback finished its batch."""
-        batches = batch_of_file(os.path.join(base, f"ckpt-{name}"))
-        done = emitted[name]
+        batches = batch_of_file(os.path.join(self.base, f"ckpt-{name}"))
+        done = self.emitted[name]
         return {f: done[b] for f, b in batches.items() if b in done}
 
-    def wait_for(files: list[str], timeout: float) -> bool:
+    def wait_for(self, files: list[str], timeout: float, poll: float = 0.1) -> bool:
         deadline = time.time() + timeout
         while time.time() < deadline:
-            if all(set(files) <= emit_times(q).keys() for q in QUERY_NAMES):
+            if all(set(files) <= self.emit_times(q).keys() for q in QUERY_NAMES):
                 return True
-            time.sleep(0.1)
+            time.sleep(poll)
         return False
 
+    def stop(self) -> dict[str, list]:
+        """Stop both queries; return each one's progress reports."""
+        progress = {n: list(q.recentProgress) for n, q in self.queries.items()}
+        for q in self.queries.values():
+            q.stop()
+        return progress
+
+
+def prepare(ctx: Ctx) -> dict:
+    from mito_spark.plans.pipeline_spec import compile_pipeline
+
+    reps = itertools.count()
+
+    def start(spark) -> Streams:
+        with ctx.tracer.span("plans.compile_pipeline"):
+            spec = compile_pipeline(SPEC)
+        return Streams(ctx, spark, spec, os.path.join(ctx.work, f"stream-{next(reps)}")).start()
+
+    ctx.e2e["setup_s"], streams = setup(ctx, SETUP_REPS, [], start, Streams.stop)
+    return {"streams": streams}
+
+
+def measure(ctx: Ctx, state: dict) -> float:
+    """One open-loop run on the queries the last set-up started:
+    ``ctx.seconds`` of offered load, drain, then the untimed checks.
+    Returns the wall time from the generator's start until every
+    offered event was emitted by both queries."""
+    from pyspark.sql import functions as F
+
+    tr, spark, streams = ctx.tracer, ctx.spark, state["streams"]
+    since = time.perf_counter()
+    n_files = max(int(ctx.seconds * FILES_PER_S), 1)
+    generator = Generator(ctx.seed, streams.staging, streams.incoming, n_files)
+    total = (n_files + 1) * EVENTS_PER_FILE
+    names = [file_name(k) for k in range(n_files + 1)]
     try:
-        wait_for(names[:1], DRAIN_TIMEOUT_S)
         generator.start()
         generator.join()
         t_stop = time.time()
-        drained = wait_for(names, DRAIN_TIMEOUT_S)
+        drained = streams.wait_for(names, DRAIN_TIMEOUT_S)
         t_end = time.time()
     finally:
-        progress = {n: list(q.recentProgress) for n, q in queries.items()}
-        for q in queries.values():
-            q.stop()
+        progress = streams.stop()
     if not drained:
-        errors = [str(q.exception()) for q in queries.values() if q.exception()]
+        errors = [str(q.exception()) for q in streams.queries.values() if q.exception()]
         ctx.report.append(f"WRONG stream did not drain within {DRAIN_TIMEOUT_S:.0f} s {errors}")
 
-    # latency of each measured event: its batch's emit time minus its stamp
-    # (an event never emitted counts as emitted when the wait gave up)
-    emits = {q: emit_times(q) for q in QUERY_NAMES}
+    # latency of each measured file's events: its batch's emit time minus
+    # their stamp (a file never emitted counts as emitted when the wait
+    # gave up). The events of one file share one latency, so a file is
+    # one sample.
+    emits = {q: streams.emit_times(q) for q in QUERY_NAMES}
     lat: dict[str, list[float]] = {n: [] for n in QUERY_NAMES + ("visible",)}
     backlog = 0
     last_visible = generator.t0
     for k, due in generator.due.items():
-        if k == 0:
-            continue
         emit = {q: emits[q].get(names[k], t_end) for q in QUERY_NAMES}
         visible = max(emit.values())
         for q in QUERY_NAMES:
-            lat[q] += [emit[q] - due] * EVENTS_PER_FILE
-        lat["visible"] += [visible - due] * EVENTS_PER_FILE
+            lat[q].append(emit[q] - due)
+        lat["visible"].append(visible - due)
         backlog += EVENTS_PER_FILE if visible > t_stop else 0
         last_visible = max(last_visible, visible)
     wall = last_visible - generator.t0
@@ -260,17 +305,14 @@ def measure(ctx: Ctx, state: dict) -> float:
     # checks, untimed
     with tr.suspended():
         ctx.attempted += total
-        files = sorted(generator.due)
-        want = expected_transform(ctx.seed, files)
+        want = expected_transform(ctx.seed, [0, *sorted(generator.due)])
         got_rows = []
-        if os.path.isdir(sink):
-            got_rows = (
-                spark.read.parquet(sink).select("event_id", "k", "srcs").collect()
-            )
+        if os.path.isdir(streams.sink):
+            got_rows = spark.read.parquet(streams.sink).select("event_id", "k", "srcs").collect()
         got = [(r["event_id"], r["k"], tuple(r["srcs"])) for r in got_rows]
         bad_transform = len(set(got) ^ want) + (len(got) - len(set(got)))
         truth = (
-            spark.read.schema(SPARK_SCHEMA).parquet(incoming)
+            spark.read.schema(SPARK_SCHEMA).parquet(streams.incoming)
             .groupBy("user_id")
             .agg(F.count("*").alias("n"), F.min("ts").alias("first"),
                  F.max("ts").alias("last"), F.sum("value").alias("total"))
@@ -278,16 +320,16 @@ def measure(ctx: Ctx, state: dict) -> float:
         )
         bad_cursor = 0
         for r in truth:
-            c = cursors.get(r["user_id"])
+            c = streams.cursors.get(r["user_id"])
             if c is None or c[:3] != (r["n"], r["first"], r["last"]) or not math.isclose(
                 c[3], r["total"], rel_tol=1e-9
             ):
                 bad_cursor += r["n"]
-        bad_cursor += len(set(cursors) - {r["user_id"] for r in truth})
+        bad_cursor += len(set(streams.cursors) - {r["user_id"] for r in truth})
         ctx.failed += min(total, bad_transform + bad_cursor)
         if bad_transform or bad_cursor:
             ctx.report.append(f"WRONG sink rows off by {bad_transform}, cursor events off by {bad_cursor}")
-        sink_files = len(glob.glob(os.path.join(sink, "**", "*.parquet"), recursive=True))
+        sink_files = len(glob.glob(os.path.join(streams.sink, "**", "*.parquet"), recursive=True))
 
     n = len(lat["visible"])
     p50, (tl, label) = median(lat["visible"]), tail(lat["visible"])
@@ -297,18 +339,18 @@ def measure(ctx: Ctx, state: dict) -> float:
     ctx.note("offered_events_per_s", FILES_PER_S * EVENTS_PER_FILE, "1/s", f"{n_files} files")
     for q in QUERY_NAMES:
         q50, (qt, ql) = median(lat[q]), tail(lat[q])
-        ctx.note(f"{q}_latency_p50_s", q50, "s", f"n={n}")
-        ctx.note(f"{q}_latency_{ql}_s", qt, "s", f"n={n}")
+        ctx.note(f"{q}_latency_p50_s", q50, "s", f"n={n} files")
+        ctx.note(f"{q}_latency_{ql}_s", qt, "s", f"n={n} files")
         ctx.layers[f"{q}_latency_p50_s"] = q50
         ctx.layers[f"{q}_latency_tail_s"] = qt
-    ctx.note("visible_latency_p50_s", p50, "s", f"n={n}, emitted by both queries")
-    ctx.note(f"visible_latency_{label}_s", tl, "s", f"n={n}")
+    ctx.note("visible_latency_p50_s", p50, "s", f"n={n} files, emitted by both queries")
+    ctx.note(f"visible_latency_{label}_s", tl, "s", f"n={n} files")
     ctx.note("stream_backlog_events", backlog, "count", "at generator stop")
     ctx.note("generator_late_ms", 1e3 * max(generator.late), "ms", "max")
     ctx.layers["stream_backlog_events"] = backlog
     ctx.layers["stream.generator_late_ms"] = 1e3 * max(generator.late)
-    ctx.layers["plans.apply_s"] = median(tr.durations("plans.apply"))
-    ctx.layers["sources.sink_write_s"] = median(tr.durations("sources.write_partitioned"))
+    ctx.layers["plans.apply_s"] = median(tr.durations("plans.apply", since))
+    ctx.layers["sources.sink_write_s"] = median(tr.durations("sources.write_partitioned", since))
     ctx.layers["sources.sink_files"] = sink_files
     for name in QUERY_NAMES:
         ctx.layers.update(progress_metrics(progress[name], name))

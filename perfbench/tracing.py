@@ -78,8 +78,10 @@ class Tracer:
         finally:
             self.enabled = was
 
-    def durations(self, name: str) -> list[float]:
-        return [s.end - s.start for s in self.spans if s.name == name]
+    def durations(self, name: str, since: float = -math.inf) -> list[float]:
+        """Durations of the spans called ``name`` that started at or
+        after ``since`` (a ``time.perf_counter()`` reading)."""
+        return [s.end - s.start for s in self.spans if s.name == name and s.start >= since]
 
     def self_times(self) -> dict[str, float]:
         """Seconds each layer (the span name's first dotted part) was

@@ -119,11 +119,12 @@ def build_ann_index(
         unit_norm_expr,
     )
 
-    # ADVICE r7 #1: sinks.write_partitioned sets partitionOverwriteMode
-    # =dynamic session-wide; an in-place rebuild with FEWER cells would
-    # then leave stale cell>=new_n_cells partition dirs behind. Clear
-    # the partitioned table before every (re)build so the on-disk
-    # layout is exactly this build's.
+    # Under a session whose partitionOverwriteMode is dynamic (a
+    # caller's choice — the sinks pass it as a writer option and leave
+    # the session alone), an in-place rebuild with FEWER cells would
+    # leave stale cell>=new_n_cells partition dirs behind. Clear the
+    # partitioned table before every (re)build so the on-disk layout is
+    # exactly this build's.
     shutil.rmtree(os.path.join(index_dir, "tagged.parquet"), ignore_errors=True)
     emb = spread(load_table(spark, sf_dir, "embeddings")).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")

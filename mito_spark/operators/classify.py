@@ -86,7 +86,9 @@ def _chars(p: Column) -> Column:
 def _char_trigrams(chars: Column) -> Column:
     """All char trigrams from a STAGED char-array column (positions,
     not distinct — NB wants occurrence counts). Per gram: three O(1)
-    ``element_at`` lookups + one concat — the r1-r12
+    ``element_at`` lookups + one ``concat_ws("", ...)``, which skips a
+    NULL element exactly as the slice form below does (a plain
+    ``concat`` would null the whole gram) — the r1-r12
     ``concat_ws("", slice(chars, i, 3))`` form allocated a 3-element
     array per position inside the interpreted lambda and measured
     4.3× slower on the 10× corpus (3.39 → 0.79 s model-build leg,
@@ -102,8 +104,8 @@ def _char_trigrams(chars: Column) -> Column:
     ).otherwise(F.array().cast("array<int>"))
     return F.transform(
         idx,
-        lambda i: F.concat(
-            F.element_at(chars, i), F.element_at(chars, i + 1), F.element_at(chars, i + 2)
+        lambda i: F.concat_ws(
+            "", F.element_at(chars, i), F.element_at(chars, i + 1), F.element_at(chars, i + 2)
         ),
     )
 

@@ -27,11 +27,17 @@ def write_partitioned(
 ) -> None:
     """Write with directory partitioning. With dynamic partition
     overwrite, re-running a day's pipeline replaces only that day's
-    directories — the idempotent-backfill contract."""
+    directories — the idempotent-backfill contract. The mode is a
+    writer option (it takes precedence over the session conf), so the
+    session's own ``partitionOverwriteMode`` is left as it was."""
     cols = [partition_by] if isinstance(partition_by, str) else list(partition_by)
-    spark = df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    df.write.mode(mode).partitionBy(*cols).format(fmt).save(path)
+    (
+        df.write.mode(mode)
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*cols)
+        .format(fmt)
+        .save(path)
+    )
 
 
 def add_date_partition(df: DataFrame, ts_col: str = "ts", name: str = "dt") -> DataFrame:
@@ -99,8 +105,7 @@ def compact(
             )
         df = df.where(where)
     out = df.repartition(target_files)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    w = out.write.mode("overwrite").format(fmt)
+    w = out.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").format(fmt)
     if pcols:
         w = w.partitionBy(*pcols)
     w.save(path)

@@ -44,46 +44,6 @@ CURSOR_OUTPUT_SCHEMA = StructType(
     ]
 )
 
-# state tuple mirrors the output minus the key (timestamps kept as
-# microsecond epoch longs — state-store codecs want flat primitives)
-CURSOR_STATE_SCHEMA = StructType(
-    [
-        StructField("n_events", LongType()),
-        StructField("first_us", LongType()),
-        StructField("last_us", LongType()),
-        StructField("total_value", DoubleType()),
-    ]
-)
-
-
-def _cursor_step(
-    key: tuple, batches: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """One micro-batch update for one key: merge the batch's events
-    into the cursor, emit the refreshed cursor row (update mode)."""
-    n, first_us, last_us, total = (
-        state.get if state.exists else (0, None, None, 0.0)
-    )
-    for pdf in batches:
-        if pdf.empty:
-            continue
-        ts_us = pdf["ts"].astype("int64") // 1000  # pandas ns → µs
-        n += len(pdf)
-        b_first, b_last = int(ts_us.min()), int(ts_us.max())
-        first_us = b_first if first_us is None else min(first_us, b_first)
-        last_us = b_last if last_us is None else max(last_us, b_last)
-        total += float(pdf["value"].sum())
-    state.update((n, first_us, last_us, total))
-    yield pd.DataFrame(
-        {
-            "user_id": [key[0]],
-            "n_events": [n],
-            "first_ts": [pd.Timestamp(first_us, unit="us")],
-            "last_ts": [pd.Timestamp(last_us, unit="us")],
-            "total_value": [total],
-        }
-    )
-
 
 def per_key_cursor(events: DataFrame) -> DataFrame:
     """Streaming per-key cursor: for each user, a continuously-updated
@@ -91,16 +51,32 @@ def per_key_cursor(events: DataFrame) -> DataFrame:
     cursor.timestamps.{first,last} summary (example.cel:28-34), per key,
     with state in the store instead of the driver.
 
-    Works on a streaming DataFrame (update output mode). Each
-    micro-batch is the `want_more` re-entry: previous state is the
-    carried cursor, the batch is the new page.
+    The cursor is a mergeable aggregate (count, min, max, sum), so it
+    is Catalyst's native streaming ``groupBy().agg()``: each micro-batch
+    is partially aggregated and merged into the JVM state store — no
+    Python worker, no Arrow round trip. Each micro-batch is the
+    `want_more` re-entry: the stored aggregate is the carried cursor,
+    the batch is the new page. Run it in update output mode: a batch
+    emits one row per key it touched, with the columns of
+    CURSOR_OUTPUT_SCHEMA; ``total_value`` is 0.0 for a key whose values
+    are all NULL. State resumes from the query's checkpoint.
     """
-    return events.groupBy("user_id").applyInPandasWithState(
-        _cursor_step,
-        outputStructType=CURSOR_OUTPUT_SCHEMA,
-        stateStructType=CURSOR_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    from pyspark.sql import functions as F
+
+    # SQL-text expressions: on a fresh session they build in about a
+    # third of the time of the equivalent pyspark.sql.functions calls,
+    # and every query start pays that. An NTZ ts casts to TIMESTAMP in
+    # the session time zone, so the instant is unchanged.
+    typed = events.selectExpr(
+        "CAST(user_id AS BIGINT) AS user_id",
+        "CAST(ts AS TIMESTAMP) AS ts",
+        "CAST(value AS DOUBLE) AS value",
+    )
+    return typed.groupBy("user_id").agg(
+        F.expr("count(1) AS n_events"),
+        F.expr("min(ts) AS first_ts"),
+        F.expr("max(ts) AS last_ts"),
+        F.expr("coalesce(sum(value), 0.0D) AS total_value"),
     )
 
 

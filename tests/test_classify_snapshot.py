@@ -189,6 +189,22 @@ def test_nb_langid_separates_disjoint_alphabets(spark, tmp_path):
     assert sum(r["n_docs"] for r in out) == len(te)
 
 
+def test_char_trigrams_skip_null_elements(spark):
+    """A NULL element in the char array is skipped inside its grams,
+    as in the ``concat_ws("", slice(chars, i, 3))`` form, rather than
+    nulling the gram; a NULL-free array gives the plain trigrams."""
+    from pyspark.sql import functions as F
+
+    from mito_spark.operators.classify import _char_trigrams
+
+    df = spark.createDataFrame(
+        [(["a", "b", "c", "d"],), (["a", None, "c", "d"],), (["a", "b"],)],
+        "chars array<string>",
+    )
+    got = [r.grams for r in df.select(_char_trigrams(F.col("chars")).alias("grams")).collect()]
+    assert got == [["abc", "bcd"], ["ac", "cd"], []]
+
+
 def test_nb_langid_gramless_docs_predict_und(spark, tmp_path):
     """Docs shorter than one trigram have no features; they must
     surface as 'und', never vanish from the confusion matrix."""

@@ -803,3 +803,36 @@ def test_qc_calibration_has_no_global_sort_window(spark, sf_dir):
             # unpartitioned window: only legal over the bounded
             # pid-counts frame
             assert first.startswith("pid"), spec
+
+
+@pytest.mark.parametrize(
+    "schema",
+    [
+        None,  # the events stream as stream_events_from_parquet types it
+        "user_id INT, ts TIMESTAMP_NTZ, value FLOAT",
+    ],
+)
+def test_per_key_cursor_is_a_native_streaming_aggregate(spark, sf_dir, schema):
+    """per_key_cursor keeps its state in the JVM state store: the
+    streaming plan is a StateStoreRestore/Save aggregation with no
+    Python or Arrow node (no FlatMapGroupsInPandasWithState, no
+    pandas/Arrow eval), and its output names and types are
+    CURSOR_OUTPUT_SCHEMA whatever the input's types."""
+    from mito_spark.streaming.stateful import CURSOR_OUTPUT_SCHEMA, per_key_cursor
+    from mito_spark.streaming.stream_ops import stream_events_from_parquet
+
+    if schema is None:
+        stream = stream_events_from_parquet(spark, sf_dir)
+    else:
+        stream = (
+            spark.readStream.schema(schema)
+            .option("pathGlobFilter", "events.parquet")
+            .parquet(sf_dir)
+        )
+    cursor = per_key_cursor(stream)
+    plan = _plan(cursor)
+    assert "StateStoreSave" in plan
+    assert not re.search(r"InPandas|InArrow|EvalPython|PythonUDF|ArrowPython", plan), plan
+    assert [(f.name, f.dataType) for f in cursor.schema] == [
+        (f.name, f.dataType) for f in CURSOR_OUTPUT_SCHEMA
+    ]

@@ -326,6 +326,33 @@ def test_compaction_reduces_files(spark, sf_dir, tmp_path):
     assert spark.read.parquet(path).count() == ev.count()
 
 
+def test_sinks_leave_session_overwrite_mode_alone(spark, sf_dir, tmp_path):
+    """write_partitioned and compact pass dynamic partition overwrite
+    as a writer option: under a static session each call leaves the
+    session's partitionOverwriteMode as it was, and still overwrites
+    only the partitions it writes."""
+    from mito_spark.engine import load_table
+    from mito_spark.sources.sinks import compact, write_partitioned
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        ev = load_table(spark, sf_dir, "events")
+        path = str(tmp_path / "ev")
+        write_partitioned(ev, path, "event_type")
+        assert spark.conf.get(key) == "static"
+        write_partitioned(ev.where("event_type = 'click'"), path, "event_type")
+        assert spark.conf.get(key) == "static"
+        compact(spark, path, target_files=1, where="event_type = 'click'")
+        assert spark.conf.get(key) == "static"
+        compact(spark, path, target_files=1)
+        assert spark.conf.get(key) == "static"
+        assert spark.read.parquet(path).count() == ev.count()
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_read_file_bytes(spark, tmp_path):
     f = tmp_path / "payload.bin"
     f.write_bytes(b"\x00\x01hello")

@@ -77,25 +77,11 @@ def test_asof_join_tolerance(spark):
     assert tight.right_v is None  # match older than tolerance dropped
 
 
-def test_per_key_cursor_matches_batch(spark, sf_dir):
-    """The stateful per-key cursor, drained over micro-batches, must
-    equal the batch groupBy — state carried through the store is the
-    same computation as a shuffle-aggregate."""
-    from mito_spark.engine import load_table
-    from mito_spark.streaming.stateful import latest_rows, per_key_cursor
-
-    stream = stream_events_from_parquet(spark, sf_dir)
-    rows = []
-    sink = ChannelSink("cursors", lambda b, _i: rows.extend(b.collect()))
-    q = sink.send_to(per_key_cursor(stream), output_mode="update", availableNow=True)
-    q.awaitTermination(120)
-    sink.close()
-    final = latest_rows(rows)
-
+def _assert_cursor_equals_batch(final: dict, events) -> None:
+    """The drained cursor per key equals the batch groupBy of events."""
     batch = {
         r.user_id: r
-        for r in load_table(spark, sf_dir, "events")
-        .groupBy("user_id")
+        for r in events.groupBy("user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.min("ts").alias("first_ts"),
@@ -110,6 +96,79 @@ def test_per_key_cursor_matches_batch(spark, sf_dir):
         assert s.n_events == b.n_events
         assert s.first_ts == b.first_ts and s.last_ts == b.last_ts
         assert abs(s.total_value - b.total_value) < 1e-6
+
+
+def test_per_key_cursor_matches_batch(spark, sf_dir):
+    """The stateful per-key cursor, drained over micro-batches, must
+    equal the batch groupBy — state carried through the store is the
+    same computation as a shuffle-aggregate."""
+    from mito_spark.engine import load_table
+    from mito_spark.streaming.stateful import latest_rows, per_key_cursor
+
+    stream = stream_events_from_parquet(spark, sf_dir)
+    rows = []
+    sink = ChannelSink("cursors", lambda b, _i: rows.extend(b.collect()))
+    q = sink.send_to(per_key_cursor(stream), output_mode="update", availableNow=True)
+    q.awaitTermination(120)
+    sink.close()
+    _assert_cursor_equals_batch(latest_rows(rows), load_table(spark, sf_dir, "events"))
+
+
+def test_per_key_cursor_merges_across_batches(spark, sf_dir, tmp_path):
+    """Events split over three files, one file per micro-batch, so a
+    key's events arrive in several batches: the drained cursor must
+    merge the state-store rows into the batch groupBy, not report the
+    last batch's slice."""
+    from collections import Counter
+
+    from mito_spark.engine import load_table
+    from mito_spark.streaming.stateful import latest_rows, per_key_cursor
+
+    ev = load_table(spark, sf_dir, "events")
+    src = str(tmp_path / "src")
+    for i in range(3):
+        ev.where(F.col("event_id") % 3 == i).coalesce(1).write.mode("append").parquet(src)
+    stream = spark.readStream.schema(ev.schema).option("maxFilesPerTrigger", 1).parquet(src)
+    batches: list = []
+    sink = ChannelSink("cursor_batches", lambda b, i: batches.append((i, b.collect())))
+    q = sink.send_to(per_key_cursor(stream), output_mode="update", availableNow=True)
+    q.awaitTermination(120)
+    sink.close()
+
+    assert sum(1 for _, rows in batches if rows) >= 3
+    touched = Counter(r.user_id for _, rows in batches for r in rows)
+    assert max(touched.values()) >= 2  # some key spans several batches
+    _assert_cursor_equals_batch(latest_rows([r for _, rows in batches for r in rows]), ev)
+
+
+def test_per_key_cursor_all_null_values_total_zero(spark, tmp_path):
+    """A key whose values are all NULL — in every batch — still has its
+    events counted, and its total_value is 0.0, not NULL."""
+    from mito_spark.streaming.stateful import latest_rows, per_key_cursor
+
+    schema = "user_id BIGINT, ts TIMESTAMP, value DOUBLE"
+    src = str(tmp_path / "src")
+    files = [
+        [(1, "2024-01-01 00:00:00", None), (2, "2024-01-01 00:01:00", 2.5)],
+        [(1, "2024-01-01 00:05:00", None), (2, "2024-01-01 00:06:00", None)],
+    ]
+    for rows_in in files:
+        (
+            spark.createDataFrame(rows_in, "user_id BIGINT, ts STRING, value DOUBLE")
+            .select("user_id", F.col("ts").cast("timestamp").alias("ts"), "value")
+            .coalesce(1).write.mode("append").parquet(src)
+        )
+    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
+    rows: list = []
+    sink = ChannelSink("null_values", lambda b, _i: rows.extend(b.collect()))
+    q = sink.send_to(per_key_cursor(stream), output_mode="update", availableNow=True)
+    q.awaitTermination(120)
+    sink.close()
+
+    final = latest_rows(rows)
+    assert final[1].n_events == 2 and final[1].total_value == 0.0
+    assert final[2].n_events == 2 and final[2].total_value == 2.5
+    assert all(r.total_value is not None for r in rows)
 
 
 def test_stream_stream_join_matches_batch(spark, sf_dir):
